@@ -32,6 +32,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from evidence_images_etl_airflow_spark.session import hadoop_fs
+
 
 def file_inventory(spark: SparkSession, path: str) -> DataFrame:
     """Distinct ``(file_path, file_bytes)`` of a parquet dataset, read
@@ -98,16 +100,6 @@ def compaction_summary(
     )
 
 
-def _fs_for(spark: SparkSession, path: str):
-    """(jvm Path class, FileSystem) for ``path`` — the storage-agnostic
-    Hadoop handles every swap/recovery helper below shares."""
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc
-    hadoop_path = jvm.org.apache.hadoop.fs.Path
-    fs = hadoop_path(path).getFileSystem(jsc.hadoopConfiguration())
-    return hadoop_path, fs
-
-
 def _manifest_path(path: str) -> str:
     return f"{path.rstrip('/')}__compact_manifest.json"
 
@@ -164,7 +156,8 @@ def recover_compaction(spark: SparkSession, path: str) -> dict:
     ordering means the crash window holds transient DUPLICATES, never
     missing rows; this replay removes the duplicates mechanically.
     Returns ``{"moves_replayed", "deletes_replayed"}``."""
-    hadoop_path, fs = _fs_for(spark, path)
+    jvm, fs, _ = hadoop_fs(spark, path)
+    hadoop_path = jvm.org.apache.hadoop.fs.Path
     stray_tmp = hadoop_path(_manifest_path(path) + ".tmp")
     if fs.exists(stray_tmp):
         fs.delete(stray_tmp, False)  # pre-commit garbage from a crash mid-write
@@ -308,7 +301,8 @@ def execute_compaction(
         .parquet(tmp)
     )
 
-    hadoop_path, fs = _fs_for(spark, path)
+    jvm, fs, _ = hadoop_fs(spark, path)
+    hadoop_path = jvm.org.apache.hadoop.fs.Path
     # Enumerate the full move list BEFORE touching the table, then
     # persist it as the commit manifest: after this point the swap is
     # replayable from the manifest alone (recover_compaction), so a
@@ -405,8 +399,8 @@ def maintain_dedup_store(
     each surviving epoch's compaction stats."""
     import re
 
-    hadoop_path, fs = _fs_for(spark, path)
-    root = hadoop_path(path)
+    jvm, fs, root = hadoop_fs(spark, path)
+    hadoop_path = jvm.org.apache.hadoop.fs.Path
     if not fs.exists(root):
         raise FileNotFoundError(f"no dedup store at {path}")
     if keep_epochs is not None and int(keep_epochs) < 1:

@@ -62,3 +62,13 @@ def get_session(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def hadoop_fs(spark: SparkSession, path: str):
+    """``(jvm, FileSystem, Path)`` for ``path`` — the storage-agnostic
+    Hadoop handles (local, HDFS, s3a/abfs) that every directory swap,
+    listing and recovery helper shares."""
+    jvm = spark.sparkContext._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    return jvm, fs, hpath

@@ -31,11 +31,7 @@ from urllib.parse import unquote
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def _fs(spark: SparkSession, path: str):
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jvm, hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+from evidence_images_etl_airflow_spark.session import hadoop_fs
 
 
 def _flip_pointer(spark: SparkSession, table: str, tmp_suffix: str, value: int) -> None:
@@ -47,7 +43,7 @@ def _flip_pointer(spark: SparkSession, table: str, tmp_suffix: str, value: int) 
     back to delete+rename only if the filesystem exposes no
     FileContext (readers are still covered by the current_version
     max-version fallback)."""
-    jvm, fs = _fs(spark, table)
+    jvm, fs, root = hadoop_fs(spark, table)
     tmp = jvm.org.apache.hadoop.fs.Path(f"{table}/_LATEST.tmp.{tmp_suffix}")
     out = fs.create(tmp, True)
     try:
@@ -57,9 +53,7 @@ def _flip_pointer(spark: SparkSession, table: str, tmp_suffix: str, value: int) 
     ptr = jvm.org.apache.hadoop.fs.Path(f"{table}/_LATEST")
     try:
         conf = spark.sparkContext._jsc.hadoopConfiguration()
-        fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(
-            jvm.org.apache.hadoop.fs.Path(table).toUri(), conf
-        )
+        fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(root.toUri(), conf)
         gw = spark.sparkContext._gateway
         opts = gw.new_array(jvm.org.apache.hadoop.fs.Options.Rename, 1)
         opts[0] = jvm.org.apache.hadoop.fs.Options.Rename.OVERWRITE
@@ -70,8 +64,7 @@ def _flip_pointer(spark: SparkSession, table: str, tmp_suffix: str, value: int) 
 
 
 def list_versions(spark: SparkSession, table: str) -> list[int]:
-    jvm, fs = _fs(spark, table)
-    root = jvm.org.apache.hadoop.fs.Path(table)
+    _jvm, fs, root = hadoop_fs(spark, table)
     if not fs.exists(root):
         return []
     out = []
@@ -89,7 +82,7 @@ def current_version(spark: SparkSession, table: str) -> int | None:
     delete and rename), fall back to the newest staged version
     directory — for a single writer the newest complete ``v=N`` is
     exactly what the missing pointer was about to say."""
-    jvm, fs = _fs(spark, table)
+    jvm, fs, _ = hadoop_fs(spark, table)
     ptr = jvm.org.apache.hadoop.fs.Path(f"{table}/_LATEST")
     if not fs.exists(ptr):
         versions = list_versions(spark, table)
@@ -155,7 +148,7 @@ def vacuum(spark: SparkSession, table: str, keep_last: int = 2) -> list[int]:
     versions = list_versions(spark, table)
     cur = current_version(spark, table)
     candidates = [v for v in versions[:-keep_last] if v != cur] if keep_last else []
-    jvm, fs = _fs(spark, table)
+    jvm, fs, _ = hadoop_fs(spark, table)
     for v in candidates:
         fs.delete(jvm.org.apache.hadoop.fs.Path(f"{table}/v={v}"), True)
     return candidates
@@ -213,7 +206,7 @@ def delete_where(
     if v is None:
         raise FileNotFoundError(f"no published version under {table}")
     vdir = f"{table}/v={v}"
-    jvm, fs = _fs(spark, table)
+    jvm, fs, _ = hadoop_fs(spark, table)
     all_files = [
         st.getPath().toString()
         for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(vdir))

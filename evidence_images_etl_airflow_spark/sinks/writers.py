@@ -16,10 +16,12 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from evidence_images_etl_airflow_spark.operators.upsert import conflict_skip, merge_upsert
+from evidence_images_etl_airflow_spark.session import hadoop_fs
 
 
 class VarcharOverflowError(ValueError):
@@ -73,11 +75,105 @@ def append_parquet(
     writer.parquet(path)
 
 
-def _read_target(spark: SparkSession, path: str, like: DataFrame) -> DataFrame | None:
+def _read_target(spark: SparkSession, path: str) -> DataFrame | None:
+    """An append target, or None while it holds no table yet: the
+    directory is missing, or holds no data files (a first append that
+    crashed before committing). Any other read error propagates —
+    treating an unreadable target as empty would append every key it
+    already holds a second time."""
     try:
         return spark.read.parquet(path)
+    except AnalysisException as e:
+        if e.getCondition() in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            return None
+        raise
+
+
+def _live_dir(spark: SparkSession, path: str) -> str | None:
+    """The directory holding the last complete copy of a table that
+    :func:`swap_table` maintains: ``path``, else the ``__backup`` a
+    swap that crashed between its two renames left behind (the
+    interrupted rewrite then replays against it), else None."""
+    _jvm, fs, hpath = hadoop_fs(spark, path)
+    if fs.exists(hpath):
+        return path
+    return path.rstrip("/") + "__backup" if fs.exists(hpath.suffix("__backup")) else None
+
+
+def read_table(spark: SparkSession, path: str) -> DataFrame | None:
+    """Read a table that :func:`swap_table` maintains, recovering from
+    the ``__backup`` copy a crashed swap may have left behind. Returns
+    None only when neither exists (first write); any OTHER read error —
+    a corrupt file, a permission failure — propagates, because silently
+    bootstrapping a fresh table there would discard everything it held."""
+    live = _live_dir(spark, path)
+    return None if live is None else spark.read.parquet(live)
+
+
+def swap_table(spark: SparkSession, df: DataFrame, path: str) -> None:
+    """Replace the parquet table at ``path`` with ``df`` — the one
+    directory-replace protocol of the engine: write staging ->
+    rename current to ``__backup`` -> rename staging to current -> drop
+    the backup. ``df`` may read the table it replaces: the staging write
+    materializes it before any rename. Unlike delete-then-rename, at
+    every instant at least one complete copy (current or backup) exists
+    on disk, so a crash at any step loses at most the rewrite in flight,
+    and :func:`read_table` recovers the backup.
+
+    Hadoop ``FileSystem.rename`` signals failure by returning FALSE, not
+    by raising, so each rename is checked: a failed rename raises
+    ``IOError`` and leaves the last complete copy in place, never
+    falling through to deleting it.
+
+    Single writer: the protocol assumes at most one writer per table at
+    a time (one scheduler task, or one query's foreachBatch). A second
+    concurrent swap of the same path would reclaim the first one's
+    staging directory and rename over its backup. Readers in the
+    middle of a swap may see the path missing for the instant between
+    the two renames; renames are atomic only where the store's are
+    (HDFS yes, object stores emulate them), so concurrent readers at
+    scale want a table format."""
+    import uuid
+
+    base = path.rstrip("/")
+    jvm, fs, hpath = hadoop_fs(spark, path)
+    # Reclaim staging dirs a previous crashed swap leaked: a crash
+    # between the staging write and the renames leaves a uuid-named
+    # sibling no later run would otherwise identify. Best-effort — a
+    # listing/delete failure must not block the rewrite.
+    parent = hpath.getParent()
+    marker = hpath.getName() + "__staging_"
+    try:
+        if parent is not None and fs.exists(parent):
+            for st in fs.listStatus(parent):
+                if st.getPath().getName().startswith(marker):
+                    fs.delete(st.getPath(), True)
     except Exception:
-        return None  # first write: target does not exist yet
+        pass
+    staging = f"{base}__staging_{uuid.uuid4().hex[:8]}"
+    df.write.mode("overwrite").parquet(staging)  # materializes BEFORE any rename
+    backup = hpath.suffix("__backup")
+    if fs.exists(hpath):
+        # a live current table supersedes any stale backup; only THEN is
+        # the old backup safe to drop (deleting it while current is
+        # MISSING — the recovery state where the backup IS the last
+        # complete copy — would leave no copy if a rename below fails)
+        if fs.exists(backup):
+            fs.delete(backup, True)
+        if not fs.rename(hpath, backup):
+            raise IOError(
+                f"table swap aborted: rename {path} -> {base}__backup "
+                "returned false; current table left in place"
+            )
+    if not fs.rename(jvm.org.apache.hadoop.fs.Path(staging), hpath):
+        # the backup still holds the last complete table — leave it for
+        # read_table's recovery path; do NOT fall through to delete it
+        raise IOError(
+            f"table swap failed: rename {staging} -> {path} returned "
+            "false; last complete table preserved at "
+            f"{base}__backup (auto-recovered on next read)"
+        )
+    fs.delete(backup, True)
 
 
 def idempotent_append_parquet(
@@ -96,7 +192,7 @@ def idempotent_append_parquet(
     shuffle, not a rewrite. With a Delta/Iceberg target this becomes
     MERGE WHEN NOT MATCHED THEN INSERT with file skipping.
     """
-    existing = _read_target(spark, path, df)
+    existing = _read_target(spark, path)
     if existing is None:
         from evidence_images_etl_airflow_spark.operators.upsert import dedup_first_wins
 
@@ -122,29 +218,17 @@ def merge_into_parquet(
     update_cols: Sequence[str] | None = None,
 ) -> None:
     """K5/J3: staging + MERGE (learn/postgres_op.py:30-68) on a parquet
-    target: read target, full-outer merge, rewrite via a temp directory
-    swap through the Hadoop FileSystem API — the same pattern as
-    ``compact_parquet``, so the swap works on any supported storage
-    scheme (local, HDFS, s3a/abfs), not just the local filesystem a
-    ``shutil`` move can reach. On a table format this is a native MERGE;
-    on raw parquet a rewrite is the only transactional option. Note the
-    delete+rename window is only atomic where the store's rename is
-    (HDFS yes; object stores emulate) — a table format is the real
-    answer for concurrent readers at 100 TB."""
-    import uuid
-
-    target = _read_target(spark, path, source)
-    if target is None:
-        source.write.mode("overwrite").parquet(path)
-        return
-    merged = merge_upsert(target, source, keys, update_cols)
-    tmp = f"{path.rstrip('/')}__staging_{uuid.uuid4().hex[:8]}"
-    merged.write.mode("overwrite").parquet(tmp)
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
-    fs.delete(hpath, True)
-    fs.rename(jvm.org.apache.hadoop.fs.Path(tmp), hpath)
+    target: read the target (recovering a crashed swap's backup), then
+    full-outer merge ``source`` into it and replace the directory
+    through :func:`swap_table` — the first write too, so a crash at any
+    step leaves a complete table and a failed rename raises instead of
+    losing it. The swap goes through the Hadoop FileSystem API, so it
+    works on any supported storage scheme (local, HDFS, s3a/abfs). On a
+    table format this is a native MERGE; on raw parquet a rewrite is
+    the only transactional option."""
+    target = read_table(spark, path)
+    merged = source if target is None else merge_upsert(target, source, keys, update_cols)
+    swap_table(spark, merged, path)
 
 
 def cluster_by_range(
@@ -274,31 +358,25 @@ def compact_parquet(
     target_file_bytes: int = 128 * 1024 * 1024,
 ) -> int:
     """Small-file compaction: rewrite a parquet directory into
-    ``ceil(total_bytes / target_file_bytes)`` files and atomically swap
-    it in; returns the new file count. Streaming sinks and frequent
-    small appends accrete tiny files whose per-file open/footer cost
-    eventually dominates scans — periodic compaction (OPTIMIZE in table
-    formats) restores ~HDFS-block-sized files. Uses the Hadoop
-    FileSystem API, so it works on any supported storage, not just
-    local paths."""
+    ``ceil(total_bytes / target_file_bytes)`` files and swap it in
+    through :func:`swap_table`; returns the new file count. Streaming
+    sinks and frequent small appends accrete tiny files whose per-file
+    open/footer cost eventually dominates scans — periodic compaction
+    (OPTIMIZE in table formats) restores ~HDFS-block-sized files. A
+    compaction that crashed mid-swap is recovered: the next call
+    compacts the backup it left."""
     import math
 
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(jsc.hadoopConfiguration())
-    it = fs.listFiles(hpath, True)
+    src = _live_dir(spark, path) or path  # neither exists: the listing raises
+    _jvm, fs, hsrc = hadoop_fs(spark, src)
+    it = fs.listFiles(hsrc, True)
     total = 0
     while it.hasNext():
         f = it.next()
         if f.getPath().getName().endswith(".parquet"):
             total += f.getLen()
     n_files = max(1, math.ceil(total / target_file_bytes))
-    df = spark.read.parquet(path)
-    tmp = f"{path.rstrip('/')}__compact"
-    df.repartition(n_files).write.mode("overwrite").parquet(tmp)
-    fs.delete(hpath, True)
-    fs.rename(jvm.org.apache.hadoop.fs.Path(tmp), hpath)
+    swap_table(spark, spark.read.parquet(src).repartition(n_files), path)
     return n_files
 
 
@@ -355,10 +433,7 @@ def write_training_shards(
         }
     finally:
         df.unpersist()
-    jvm = spark.sparkContext._jvm
-    jsc = spark.sparkContext._jsc
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(jsc.hadoopConfiguration())
+    jvm, fs, hpath = hadoop_fs(spark, path)
     shards = {}
     it = fs.listStatus(hpath)
     for st in it:

@@ -32,6 +32,8 @@ from urllib.parse import unquote
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from evidence_images_etl_airflow_spark.session import hadoop_fs
+
 
 def build_manifest(
     spark: SparkSession, path: str | list[str], cols: list[str]
@@ -70,9 +72,7 @@ def update_manifest(
     filesystem operation (no data read); matching is by file NAME
     (`input_file_name` URI-encodes, FS listings don't). The stat
     columns must match the original manifest's."""
-    jvm = spark.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    _jvm, fs, hpath = hadoop_fs(spark, path)
     listed = {
         st.getPath().getName(): st.getPath().toString()
         for st in fs.listStatus(hpath)

@@ -11,8 +11,13 @@ everything new, then stop.
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from evidence_images_etl_airflow_spark.session import hadoop_fs
+from evidence_images_etl_airflow_spark.sinks import writers
 
 # Column stamped on every persisted-store row recording the foreachBatch
 # batch id that produced it. foreachBatch is at-least-once: a batch
@@ -24,30 +29,29 @@ from pyspark.sql import functions as F
 _BATCH_COL = "_last_batch"
 
 
-def _hadoop(sess: SparkSession, path: str):
-    jvm = sess.sparkContext._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(sess.sparkContext._jsc.hadoopConfiguration())
-    return jvm, fs, hpath
+def _read_stream(
+    spark: SparkSession,
+    source_path: str,
+    schema,
+    fmt: str = "parquet",
+    max_files_per_trigger: int | None = None,
+) -> DataFrame:
+    """The file-source stream every ingest below drains."""
+    reader = spark.readStream.format(fmt).schema(schema)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
+    return reader.load(source_path)
 
 
-def _read_store(sess: SparkSession, path: str) -> DataFrame | None:
-    """Read a persisted store, recovering from the ``__backup`` copy a
-    crashed swap may have left behind. Returns None only when neither
-    main nor backup exists (first batch); any OTHER read error — a
-    corrupt file, a permission failure — propagates, because silently
-    bootstrapping a fresh store there would discard every accumulated
-    count."""
-    jvm, fs, hpath = _hadoop(sess, path)
-    backup = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "__backup")
-    if fs.exists(hpath):
-        return sess.read.parquet(path)
-    if fs.exists(backup):
-        # crash window: old store was renamed aside but the new one
-        # never landed — the backup IS the current store, and the
-        # interrupted batch will replay against it.
-        return sess.read.parquet(path.rstrip("/") + "__backup")
-    return None
+def _drain(writer, checkpoint_path: str) -> None:
+    """Run a configured ``DataStreamWriter`` as one availableNow
+    trigger: process everything that has landed, then stop."""
+    (
+        writer.option("checkpointLocation", checkpoint_path)
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
 
 
 def _applied_batch(store: DataFrame | None) -> int:
@@ -60,61 +64,20 @@ def _applied_batch(store: DataFrame | None) -> int:
     return -1 if v is None else int(v)
 
 
-def _swap_store(sess: SparkSession, df: DataFrame, path: str) -> None:
-    """Replace the store via write-staging -> rename-current-to-backup
-    -> rename-staging-to-current -> drop-backup. Unlike delete-then-
-    rename, at every instant at least one complete copy (current or
-    backup) exists on disk, so a crash at any step loses at most the
-    in-flight batch — which the checkpoint will replay.
-
-    Hadoop ``FileSystem.rename`` signals failure by returning FALSE,
-    not by raising — each rename is checked (r08 ADVICE): a failed
-    staging->current rename used to fall through to deleting the
-    backup (the only remaining complete copy) and then let the
-    foreachBatch checkpoint commit, silently resetting all accumulated
-    state on the next batch. Now it raises with the backup intact."""
-    import uuid
-
-    base = path.rstrip("/")
-    jvm, fs, hpath = _hadoop(sess, path)
-    # Reclaim staging dirs a previous crashed swap leaked (r08 ADVICE):
-    # a crash between the staging write and the renames leaves a
-    # uuid-named sibling no later run would otherwise identify.
-    # Best-effort — a listing/delete failure must not block the batch.
-    parent = hpath.getParent()
-    marker = hpath.getName() + "__staging_"
-    try:
-        if parent is not None and fs.exists(parent):
-            for st in fs.listStatus(parent):
-                if st.getPath().getName().startswith(marker):
-                    fs.delete(st.getPath(), True)
-    except Exception:
-        pass
-    staging = f"{base}__staging_{uuid.uuid4().hex[:8]}"
-    df.write.mode("overwrite").parquet(staging)  # materializes BEFORE any rename
-    backup = jvm.org.apache.hadoop.fs.Path(base + "__backup")
-    if fs.exists(hpath):
-        # a live current store supersedes any stale backup; only THEN
-        # is the old backup safe to drop (r09 review: deleting it while
-        # current is MISSING — the recovery-replay state where the
-        # backup IS the last complete copy — re-opened the exact silent
-        # state-reset hole the rename checks below close)
-        if fs.exists(backup):
-            fs.delete(backup, True)
-        if not fs.rename(hpath, backup):
-            raise IOError(
-                f"store swap aborted: rename {path} -> {base}__backup "
-                "returned false; current store left in place"
-            )
-    if not fs.rename(jvm.org.apache.hadoop.fs.Path(staging), hpath):
-        # the backup still holds the last complete store — leave it for
-        # _read_store's recovery path; do NOT fall through to delete it
-        raise IOError(
-            f"store swap failed: rename {staging} -> {path} returned "
-            "false; last complete store preserved at "
-            f"{base}__backup (auto-recovered on next read)"
-        )
-    fs.delete(backup, True)
+def _fold_into_store(batch_df: DataFrame, batch_id: int, path: str, fold) -> None:
+    """One read-modify-write of a persisted store, shared by every
+    swap-store stream: read the store (recovering a crashed swap's
+    backup), skip a replayed batch, fold the batch in with
+    ``fold(batch_df, store)`` (``store`` is None on the first batch and
+    never carries the batch-id column), stamp the batch id, and swap
+    the result in through ``writers.swap_table``."""
+    sess = batch_df.sparkSession
+    store = writers.read_table(sess, path)
+    if batch_id <= _applied_batch(store):
+        return  # replayed batch — already folded in
+    merged = fold(batch_df, None if store is None else store.drop(_BATCH_COL))
+    merged = merged.withColumn(_BATCH_COL, F.lit(batch_id).cast("bigint"))
+    writers.swap_table(sess, merged, path)
 
 
 def ingest_available_now(
@@ -129,17 +92,10 @@ def ingest_available_now(
     """Read whatever files have arrived under ``source_path``, apply
     ``transform`` (DataFrame -> DataFrame), append to ``sink_path``,
     exactly once per file, then stop."""
-    stream = spark.readStream.format(fmt).schema(schema).load(source_path)
+    stream = _read_stream(spark, source_path, schema, fmt)
     if transform is not None:
         stream = transform(stream)
-    q = (
-        stream.writeStream.format("parquet")
-        .option("path", sink_path)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream.writeStream.format("parquet").option("path", sink_path), checkpoint_path)
 
 
 def windowed_counts(
@@ -239,25 +195,18 @@ def upsert_stream_available_now(
     idempotent, so the composition is effectively-once even when a
     failed batch is retried after partially committing — the same
     end-to-end guarantee the reference gets from its PK, without a
-    transactional store."""
-    from evidence_images_etl_airflow_spark.sinks.writers import (
-        idempotent_append_parquet,
-    )
-
-    stream = spark.readStream.format(fmt).schema(schema).load(source_path)
+    transactional store. The sink resolves
+    ``writers.idempotent_append_parquet`` through the module on every
+    batch, so a wrapper installed there (tracing, fault injection) sees
+    each call."""
+    stream = _read_stream(spark, source_path, schema, fmt)
     if transform is not None:
         stream = transform(stream)
 
     def land(batch_df: DataFrame, batch_id: int) -> None:
-        idempotent_append_parquet(batch_df.sparkSession, batch_df, target_path, keys)
+        writers.idempotent_append_parquet(batch_df.sparkSession, batch_df, target_path, keys)
 
-    q = (
-        stream.writeStream.foreachBatch(land)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream.writeStream.foreachBatch(land), checkpoint_path)
 
 
 def interval_join(
@@ -328,10 +277,8 @@ def continuous_rollup_available_now(
     property that makes continuous aggregates cheap. Only additive
     aggregates (sum/count/min/max) can ride this path; mean/percentile
     must be derived from the additive parts downstream."""
-    stream = spark.readStream.format("parquet").schema(schema).load(source_path)
 
-    def land(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
+    def fold(batch_df: DataFrame, target: DataFrame | None) -> DataFrame:
         partial = (
             batch_df.groupBy(
                 F.window(F.col(ts_col), window).alias("w"), F.col(key_col)
@@ -347,12 +294,8 @@ def continuous_rollup_available_now(
                 "total_value",
             )
         )
-        target = _read_store(sess, target_path)
-        if target is not None and batch_id <= _applied_batch(target):
-            return  # replayed batch — already folded in
-        base = partial if target is None else (
-            target.drop(_BATCH_COL)
-            .unionByName(partial)
+        return partial if target is None else (
+            target.unionByName(partial)
             .groupBy("window_start", key_col)
             .agg(
                 F.sum("n_events").alias("n_events"),
@@ -361,16 +304,10 @@ def continuous_rollup_available_now(
                 .alias("total_value"),
             )
         )
-        merged = base.withColumn(_BATCH_COL, F.lit(batch_id).cast("bigint"))
-        _swap_store(sess, merged, target_path)
 
-    q = (
-        stream.writeStream.foreachBatch(land)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    stream = _read_stream(spark, source_path, schema)
+    land = functools.partial(_fold_into_store, path=target_path, fold=fold)
+    _drain(stream.writeStream.foreachBatch(land), checkpoint_path)
 
 
 def heavy_hitters_stream_available_now(
@@ -405,21 +342,13 @@ def heavy_hitters_stream_available_now(
         misra_gries_summaries,
     )
 
-    reader = spark.readStream.format("parquet").schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.load(source_path)
-
-    def land(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        store = _read_store(sess, summary_path)
-        if store is not None and batch_id <= _applied_batch(store):
-            return  # replayed batch — folding it in again would break
-            # the MG underestimate certificate (est could exceed true)
+    def fold(batch_df: DataFrame, store: DataFrame | None) -> DataFrame:
+        # a replayed batch never reaches here: folding it in again would
+        # break the MG underestimate certificate (est could exceed true)
         partial = misra_gries_summaries(
             batch_df.select(value_col), value_col, capacity
         )
-        merged = partial if store is None else store.drop(_BATCH_COL).unionByName(partial)
+        merged = partial if store is None else store.unionByName(partial)
         merged = merged.groupBy("item").agg(F.sum("cnt").alias("cnt"))
         # Re-compress to the capacity bound: the merged non-null rows
         # can reach old-store + batch-partitions x capacity; subtract
@@ -433,29 +362,26 @@ def heavy_hitters_stream_available_now(
             .limit(capacity + 1)
             .collect()
         )
-        if len(top) > capacity:
-            thresh = top[-1]["cnt"]
-            err = merged.filter(F.col("item").isNull()).select(
-                F.lit(None).cast("string").alias("item"),
-                (F.coalesce(F.sum("cnt"), F.lit(0)) + F.lit(thresh))
-                .cast("bigint")
-                .alias("cnt"),
-            )
-            merged = (
-                items.select("item", (F.col("cnt") - F.lit(thresh)).alias("cnt"))
-                .filter(F.col("cnt") > 0)
-                .unionByName(err)
-            )
-        merged = merged.withColumn(_BATCH_COL, F.lit(batch_id).cast("bigint"))
-        _swap_store(sess, merged, summary_path)
+        if len(top) <= capacity:
+            return merged
+        thresh = top[-1]["cnt"]
+        err = merged.filter(F.col("item").isNull()).select(
+            F.lit(None).cast("string").alias("item"),
+            (F.coalesce(F.sum("cnt"), F.lit(0)) + F.lit(thresh))
+            .cast("bigint")
+            .alias("cnt"),
+        )
+        return (
+            items.select("item", (F.col("cnt") - F.lit(thresh)).alias("cnt"))
+            .filter(F.col("cnt") > 0)
+            .unionByName(err)
+        )
 
-    q = (
-        stream.writeStream.foreachBatch(land)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    stream = _read_stream(
+        spark, source_path, schema, max_files_per_trigger=max_files_per_trigger
     )
-    q.awaitTermination()
+    land = functools.partial(_fold_into_store, path=summary_path, fold=fold)
+    _drain(stream.writeStream.foreachBatch(land), checkpoint_path)
 
 
 def countmin_stream_available_now(
@@ -495,35 +421,19 @@ def countmin_stream_available_now(
         merge_countmin_tables,
     )
 
-    reader = spark.readStream.format("parquet").schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.load(source_path)
-
-    def land(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        store = _read_store(sess, table_path)
-        if store is not None and batch_id <= _applied_batch(store):
-            return  # replayed batch — cells are sums, a second add
-            # would double-count and break single-pass equivalence
+    def fold(batch_df: DataFrame, store: DataFrame | None) -> DataFrame:
+        # a replayed batch never reaches here: cells are sums, a second
+        # add would double-count and break single-pass equivalence
         partial = countmin_table(
             batch_df.select(value_col), value_col, depth, width, salt
         )
-        merged = (
-            partial
-            if store is None
-            else merge_countmin_tables(store.drop(_BATCH_COL), partial)
-        )
-        merged = merged.withColumn(_BATCH_COL, F.lit(batch_id).cast("bigint"))
-        _swap_store(sess, merged, table_path)
+        return partial if store is None else merge_countmin_tables(store, partial)
 
-    q = (
-        stream.writeStream.foreachBatch(land)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    stream = _read_stream(
+        spark, source_path, schema, max_files_per_trigger=max_files_per_trigger
     )
-    q.awaitTermination()
+    land = functools.partial(_fold_into_store, path=table_path, fold=fold)
+    _drain(stream.writeStream.foreachBatch(land), checkpoint_path)
 
 
 def daily_counts_stream_available_now(
@@ -550,39 +460,26 @@ def daily_counts_stream_available_now(
     replays (a double-add would break stream/batch equivalence), and
     the rewrite rides the backup-preserving rename swap. Store size
     is O(distinct days) — calendar-bounded forever."""
-    reader = spark.readStream.format("parquet").schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.load(source_path)
 
-    def land(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        store = _read_store(sess, table_path)
-        if store is not None and batch_id <= _applied_batch(store):
-            return  # replayed batch — counts are sums, adding twice
-            # would break single-pass equivalence
+    def fold(batch_df: DataFrame, store: DataFrame | None) -> DataFrame:
+        # a replayed batch never reaches here: counts are sums, adding
+        # twice would break single-pass equivalence
         partial = batch_df.groupBy(
             F.col(day_col).cast("bigint").alias("d")
         ).agg(F.count(F.lit(1)).cast("bigint").alias("y"))
         if store is None:
-            merged = partial
-        else:
-            merged = (
-                store.drop(_BATCH_COL)
-                .unionByName(partial)
-                .groupBy("d")
-                .agg(F.sum("y").cast("bigint").alias("y"))
-            )
-        merged = merged.withColumn(_BATCH_COL, F.lit(batch_id).cast("bigint"))
-        _swap_store(sess, merged, table_path)
+            return partial
+        return (
+            store.unionByName(partial)
+            .groupBy("d")
+            .agg(F.sum("y").cast("bigint").alias("y"))
+        )
 
-    q = (
-        stream.writeStream.foreachBatch(land)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
+    stream = _read_stream(
+        spark, source_path, schema, max_files_per_trigger=max_files_per_trigger
     )
-    q.awaitTermination()
+    land = functools.partial(_fold_into_store, path=table_path, fold=fold)
+    _drain(stream.writeStream.foreachBatch(land), checkpoint_path)
 
 
 def score_ingest_stream_available_now(
@@ -624,18 +521,13 @@ def score_ingest_stream_available_now(
         update_score_table,
     )
 
-    reader = spark.readStream.format("parquet").schema(schema)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    stream = reader.load(source_path)
+    stream = _read_stream(
+        spark, source_path, schema, max_files_per_trigger=max_files_per_trigger
+    )
 
     def land(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        jvm, fs, _hpath = _hadoop(sess, table_path)
-        marker = jvm.org.apache.hadoop.fs.Path(
-            table_path.rstrip("/") + "/_SUCCESS"
-        )
-        if not fs.exists(marker):
+        jvm, fs, hpath = hadoop_fs(batch_df.sparkSession, table_path)
+        if not fs.exists(jvm.org.apache.hadoop.fs.Path(hpath, "_SUCCESS")):
             # r15 ADVICE: with maxFilesPerTrigger unset, overlapping
             # landing files coalesce into ONE micro-batch, so the
             # bootstrap materialize could write duplicate ids and break
@@ -656,10 +548,4 @@ def score_ingest_stream_available_now(
                 batch_df, score, table_path, id_col, carry_cols=carry_cols
             )
 
-    q = (
-        stream.writeStream.foreachBatch(land)
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _drain(stream.writeStream.foreachBatch(land), checkpoint_path)

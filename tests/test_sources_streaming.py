@@ -291,6 +291,34 @@ def test_upsert_stream_idempotent_across_overlap(spark, tmp_path):
     assert got == [(1, "a"), (2, "b"), (3, "c")]  # no dup for keys 1/2
 
 
+def test_upsert_stream_sink_resolved_through_module(spark, tmp_path, monkeypatch):
+    """The per-batch sink looks ``writers.idempotent_append_parquet`` up
+    through the module on every batch, so a wrapper swapped in there
+    after import (a tracing or counting hook) sees each call."""
+    from evidence_images_etl_airflow_spark.sinks import writers
+    from evidence_images_etl_airflow_spark.streaming.file_stream import (
+        upsert_stream_available_now,
+    )
+
+    schema = "k long, v string"
+    src = f"{tmp_path}/src"
+    tgt = f"{tmp_path}/tgt"
+    spark.createDataFrame([(1, "a"), (2, "b")], schema).write.parquet(f"{src}/f0")
+
+    inner = writers.idempotent_append_parquet
+    appended = []
+
+    def counting(spark_, df, path, keys, order_by=None):
+        n = inner(spark_, df, path, keys, order_by)
+        appended.append(n)
+        return n
+
+    monkeypatch.setattr(writers, "idempotent_append_parquet", counting)
+    upsert_stream_available_now(spark, f"{src}/f*", schema, tgt, ["k"], f"{tmp_path}/ck")
+    assert appended == [2]
+    assert sorted(r.k for r in spark.read.parquet(tgt).collect()) == [1, 2]
+
+
 def test_interval_join_bounds_and_state(spark, tmp_path):
     """interval_join: inclusive [0, upper] bounds, keyed isolation, and
     batch/streaming agreement over a drained file source."""
@@ -392,6 +420,15 @@ def test_continuous_rollup_merges_across_runs(spark, tmp_path):
     }
     assert got == want
     assert got[(t0, "view")] == (3, 6.5)  # merged across the two drains
+
+    # replay the SAME files through a FRESH checkpoint: batch ids repeat
+    # (0...), and the store-side guard must reject them all
+    continuous_rollup_available_now(spark, src, schema, tgt, str(tmp_path / "ck2"))
+    replayed = {
+        (r["window_start"], r["event_type"]): (r["n_events"], float(r["total_value"]))
+        for r in spark.read.parquet(tgt).collect()
+    }
+    assert replayed == got  # no double count
 
 
 def test_format_roundtrips_and_guards(spark, tmp_path):

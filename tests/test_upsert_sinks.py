@@ -100,6 +100,97 @@ def test_merge_into_parquet(spark, tmp_path):
     assert out == {(dt.date(2023, 1, 1), "d"): 5, (dt.date(2023, 1, 2), "d"): 1}
 
 
+def test_merge_failed_final_rename_raises_and_keeps_table(spark, tmp_path, monkeypatch):
+    """Hadoop ``rename`` reports failure by returning false. When the
+    staging -> current rename fails, the merge raises instead of
+    returning as if it had landed, and the previous table is still
+    readable (from the backup the swap kept)."""
+    from evidence_images_etl_airflow_spark.sinks import writers
+
+    path = str(tmp_path / "dag_run")
+    schema = "dt date, dag_id string, runs int"
+    t1 = spark.createDataFrame([(dt.date(2023, 1, 1), "d", 1)], schema)
+    merge_into_parquet(spark, t1, path, ["dt", "dag_id"])
+
+    real_hadoop = writers.hadoop_fs
+
+    class FailStagingRename:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def rename(self, src, dst):
+            if "__staging_" in src.getName():
+                return False
+            return self._fs.rename(src, dst)
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+    def fake_hadoop(sess, p):
+        jvm, fs, hp = real_hadoop(sess, p)
+        return jvm, FailStagingRename(fs), hp
+
+    monkeypatch.setattr(writers, "hadoop_fs", fake_hadoop)
+    t2 = spark.createDataFrame([(dt.date(2023, 1, 2), "d", 7)], schema)
+    with pytest.raises(IOError):
+        merge_into_parquet(spark, t2, path, ["dt", "dag_id"])
+    monkeypatch.setattr(writers, "hadoop_fs", real_hadoop)
+
+    got = writers.read_table(spark, path)
+    assert got is not None
+    assert {(r.dt, r.dag_id, r.runs) for r in got.collect()} == {(dt.date(2023, 1, 1), "d", 1)}
+
+
+def test_merge_recovers_backup_left_by_crashed_swap(spark, tmp_path):
+    """A crash between the swap's two renames leaves only
+    ``<path>__backup``. The next merge reads the backup as the current
+    table, so its rows the source does not match survive."""
+    path = str(tmp_path / "dag_run")
+    schema = "dt date, dag_id string, runs int"
+    spark.createDataFrame(
+        [(dt.date(2023, 1, 1), "d", 1), (dt.date(2023, 1, 2), "d", 2)], schema
+    ).write.parquet(path + "__backup")
+
+    src = spark.createDataFrame([(dt.date(2023, 1, 2), "d", 9)], schema)
+    merge_into_parquet(spark, src, path, ["dt", "dag_id"])
+    out = {(r.dt, r.dag_id): r.runs for r in spark.read.parquet(path).collect()}
+    assert out == {(dt.date(2023, 1, 1), "d"): 1, (dt.date(2023, 1, 2), "d"): 9}
+
+
+def test_idempotent_append_read_failure_propagates(spark, tmp_path, monkeypatch):
+    """Only a missing target, or one holding no data files yet, reads as
+    empty. Any other read failure propagates: treating the target as
+    empty would append every key it already holds a second time."""
+    import os
+
+    from pyspark.errors import AnalysisException
+    from pyspark.sql.readwriter import DataFrameReader
+
+    schema = "k string, v string"
+    path = str(tmp_path / "tgt")
+    idempotent_append_parquet(spark, spark.createDataFrame([("a", "1")], schema), path, ["k"])
+
+    real_parquet = DataFrameReader.parquet
+
+    def failing_parquet(self, *paths, **options):
+        if path in paths:
+            raise AnalysisException(message="permission denied")
+        return real_parquet(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", failing_parquet)
+    batch = spark.createDataFrame([("a", "1"), ("b", "2")], schema)
+    with pytest.raises(AnalysisException, match="permission denied"):
+        idempotent_append_parquet(spark, batch, path, ["k"])
+    monkeypatch.setattr(DataFrameReader, "parquet", real_parquet)
+    assert sorted(tuple(r) for r in spark.read.parquet(path).collect()) == [("a", "1")]
+
+    # a first append that crashed before committing leaves a directory
+    # with no data files: it still reads as empty
+    crashed = str(tmp_path / "crashed")
+    os.makedirs(os.path.join(crashed, "_temporary", "0"))
+    assert idempotent_append_parquet(spark, batch, crashed, ["k"]) == 2
+
+
 def test_write_partitioned_layout_prunes(spark, tmp_path):
     from evidence_images_etl_airflow_spark.sinks.writers import write_partitioned
 
@@ -132,6 +223,13 @@ def test_compact_parquet_reduces_files_keeps_data(spark, tmp_path):
     after = sum(f.endswith(".parquet") for f in os.listdir(path))
     assert after == 1
     assert spark.read.parquet(path).count() == 10_000
+    assert spark.read.parquet(path).agg(F.sum("id")).first()[0] == 49995000
+
+    # a compaction that crashed between the swap's renames left only the
+    # backup: the next compaction rebuilds the table from it
+    os.rename(path, path + "__backup")
+    assert compact_parquet(spark, path, target_file_bytes=10**9) == 1
+    assert not os.path.exists(path + "__backup")
     assert spark.read.parquet(path).agg(F.sum("id")).first()[0] == 49995000
 
 

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import pytest
 
+from evidence_images_etl_airflow_spark.session import hadoop_fs
 from evidence_images_etl_airflow_spark.sinks import versioned as V
 
 
@@ -85,7 +86,7 @@ def _range_clustered(spark, table):
 
 
 def _file_sizes(spark, table, version):
-    jvm, fs = V._fs(spark, table)
+    jvm, fs, _ = hadoop_fs(spark, table)
     out = {}
     for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(f"{table}/v={version}")):
         name = st.getPath().getName()
